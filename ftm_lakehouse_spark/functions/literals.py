@@ -19,9 +19,12 @@ types). This is the string/int companion of
 
 Escaping: Spark's default SQL parser treats backslash as an escape
 inside string literals (``escapedStringLiterals`` off), so both the
-backslash and the quote are escaped; bit-parity with the ``F.lit``
-form is pinned by tests over the real ontology dicts and adversarial
-strings (quotes, backslashes, newlines, unicode).
+backslash and the quote are escaped. That rendering is wrong under
+``spark.sql.parser.escapedStringLiterals=true``, so
+:func:`ftm_lakehouse_spark.session.get_spark` refuses that setting.
+Bit-parity with the ``F.lit`` form is pinned by tests over the real
+ontology dicts and adversarial strings (quotes, backslashes, newlines,
+unicode).
 """
 
 from __future__ import annotations
@@ -58,8 +61,8 @@ def lit_str_map(mapping) -> Column:
 def lit_str_array_map(mapping) -> Column:
     """``map<string,array<string>>`` literal as one SQL expression."""
     items = list(mapping.items())
-    if not items:  # pragma: no cover - no empty literal maps in the engine
-        return F.create_map()
+    if not items:
+        return F.create_map().cast("map<string,array<string>>")
     body = ",".join(
         f"{sql_str(k)},array({','.join(sql_str(v) for v in vs)})"
         if vs
@@ -73,7 +76,7 @@ def lit_str_int_map(mapping) -> Column:
     """``map<string,int>`` literal as one SQL expression (values are
     Python ints rendered as INT literals, matching ``F.lit(int)``)."""
     items = list(mapping.items())
-    if not items:  # pragma: no cover - no empty literal maps in the engine
-        return F.create_map()
+    if not items:
+        return F.create_map().cast("map<string,int>")
     body = ",".join(f"{sql_str(k)},{int(v)}" for k, v in items)
     return F.expr("map(" + body + ")")

@@ -997,9 +997,8 @@ def append_to_ivfpq_index(
     is one assign/encode projection plus a partitioned parquet append,
     no shuffle beyond the cell repartition. Readers via
     :func:`load_ivfpq_index` see closed files only (parquet append
-    visibility), and a replayed batch re-appends rows — pair with
-    ``dropDuplicatesWithinWatermark`` upstream or dedup ids at query
-    time when exactly-once matters."""
+    visibility), and a replayed batch re-appends rows — dedup ids at
+    query time when exactly-once matters."""
     import json as _json
 
     with open(f"{path}/meta.json") as fh:

@@ -129,6 +129,13 @@ def get_spark(
             builder = builder.config(k.strip(), v.strip())
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # functions/literals.sql_str escapes for the default parser; with
+    # Hive-style literals every ontology map would parse to wrong values
+    if spark.conf.get("spark.sql.parser.escapedStringLiterals", "false").lower() == "true":
+        raise ValueError(
+            "spark.sql.parser.escapedStringLiterals=true is not supported: "
+            "the engine's literal maps are rendered for the default parser"
+        )
     return spark
 
 

@@ -318,7 +318,6 @@ class StatementStore:
         self,
         df: DataFrame,
         zorder: tuple[str, ...] | None = None,
-        streaming: bool = False,
     ) -> tuple[set[str], list[tuple[str, ...]]]:
         """Write ``df`` via a private stage directory, then move each
         (uniquely-named) file into the table. Returns (data-dir-relative
@@ -329,8 +328,8 @@ class StatementStore:
 
         Single-pass protocol (round-12, guide §1.2): the input plan —
         which may be an expensive subtree (an entity emission's
-        explode + dedup, the merge's canonicalize windows, a stateful
-        streaming micro-batch) — executes exactly ONCE, in the stage
+        explode + dedup, the merge's canonicalize windows, a journal
+        micro-batch) — executes exactly ONCE, in the stage
         write job. Partitions (and so the bucket set) are derived from
         the staged FILE NAMES, which replaces both the pre-pass
         discovery collect and the eager localCheckpoint that earlier
@@ -359,7 +358,7 @@ class StatementStore:
                 df, zorder, list(PARTITION_COLUMNS), fanout
             )
         else:
-            clustered = self._cluster_for_write(df, streaming=streaming)
+            clustered = self._cluster_for_write(df)
         (
             clustered.write.mode("overwrite")
             .options(**self._write_options(large=False))
@@ -424,8 +423,6 @@ class StatementStore:
         self,
         df: DataFrame,
         txn: tuple[str, int] | None = None,
-        materialize: bool = False,
-        streaming: bool = False,
     ) -> None:
         """Lock-free blind append: stage-move + one atomic commit.
         Crash between move and commit leaves untracked files that are
@@ -433,25 +430,15 @@ class StatementStore:
 
         ``txn`` = (app_id, txn_version) makes the append IDEMPOTENT
         (Delta's txnAppId/txnVersion): a replayed write with an
-        already-committed version is skipped — the contract that turns
-        an at-least-once streaming ``foreachBatch`` sink into an
-        exactly-once one (streaming/journal.py passes its checkpoint
-        identity + epoch here).
+        already-committed version is skipped before any job runs — the
+        contract that turns an at-least-once streaming ``foreachBatch``
+        sink into an exactly-once one (streaming/journal.py passes its
+        checkpoint identity + epoch here).
 
-        ``materialize`` is accepted for compatibility and ignored: the
-        single-pass ``_stage_move`` (round-12, guide §1.2) executes the
-        input plan exactly ONCE — in the stage write job — so there is
-        no second pass left to protect with an eager checkpoint. The
-        write job also consumes every input partition, the contract a
-        streaming foreachBatch sink needs even for an empty batch
-        (state-store commit validation); an empty batch touches
-        ``last_updated`` (the append RAN — the pre-r12 contract for
-        freshness consumers, ADVICE r12) but not the log.
-
-        ``streaming=True`` (the journal sink sets it) routes the write
-        clustering to the fixed-fanout path: stateful micro-batches run
-        with AQE runtime-disabled, where the REBALANCE hint would be
-        silently dropped (ADVICE r12)."""
+        The single-pass ``_stage_move`` executes the input plan exactly
+        ONCE, in the stage write job. An empty batch touches
+        ``last_updated`` (the append RAN — for freshness consumers) but
+        not the log."""
         if txn is not None and self.commits.txn_version(txn[0]) >= int(txn[1]):
             return  # replayed micro-batch: already durable, skip the job
         df = df.select(*STATEMENT_SCHEMA.fieldNames())
@@ -459,11 +446,11 @@ class StatementStore:
         # pre-existing foreign files into the log before this append's
         # files land next to them (engine-created stores: no-op)
         self._ensure_bootstrap()
-        added, parts = self._stage_move(df, streaming=streaming)
+        added, parts = self._stage_move(df)
         if not added:
-            # empty batch, consumed in full by the write job: stamp the
-            # append attempt (pre-r12 touched last_updated for every
-            # append, empty or not) without a commit record
+            # empty batch: stamp the append attempt (pre-r12 touched
+            # last_updated for every append, empty or not) without a
+            # commit record
             self.tags.touch("last_updated")
             return
         # advisory freshness stamped BEFORE data becomes VISIBLE (the
@@ -512,7 +499,7 @@ class StatementStore:
             }
         return base
 
-    def _cluster_for_write(self, df: DataFrame, streaming: bool = False) -> DataFrame:
+    def _cluster_for_write(self, df: DataFrame) -> DataFrame:
         """Distribute rows for writing: partition columns + an
         entity-keyed salt. Hashing only the 3 partition columns would
         collapse a 1.8M-row write onto <#partitions> tasks; the salt
@@ -527,32 +514,20 @@ class StatementStore:
         of it, and a backfill-sized batch splits until tasks sit near
         ``spark.sql.adaptive.advisoryPartitionSizeInBytes``. The same
         code is right at both scales; a constant fanout was right at
-        neither."""
+        neither. Stateless ``foreachBatch`` micro-batches (the journal)
+        run with AQE on and keep the hint."""
         import pyspark.sql.functions as _F
 
         fanout = int(self.spark.conf.get("spark.sql.shuffle.partitions", "32"))
         salt = _F.pmod(_F.xxhash64("entity_id"), _F.lit(max(1, fanout // 4)))
         salted = df.withColumn("_wsalt", salt)
-        # ``streaming`` is the explicit caller flag from the journal
-        # sink (ADVICE r12): a stateful foreachBatch micro-batch runs
-        # with AQE runtime-disabled while the session conf still says
-        # true, so the conf check alone would leave the REBALANCE hint
-        # silently dropped — no clustering shuffle at all — on exactly
-        # the path that needs the fixed fanout.
-        aqe_on = not streaming and (
-            str(
-                df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
-            ).lower()
-            == "true"
-        )
-        if aqe_on:
+        aqe = df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
+        if str(aqe).lower() == "true":
             clustered = salted.hint("rebalance", *PARTITION_COLUMNS, "_wsalt")
         else:
-            # stateful streaming micro-batches run with AQE force-
-            # disabled (MicroBatchExecution), and REBALANCE resolution
-            # requires AQE — the hint would be silently DROPPED there,
-            # leaving the dedup state's arbitrary partitioning. Keep
-            # the fixed-fanout hash repartition for that path.
+            # REBALANCE resolution requires AQE — the hint would be
+            # silently DROPPED in a session with AQE turned off. Keep
+            # the fixed-fanout hash repartition for that case.
             clustered = salted.repartition(fanout, *PARTITION_COLUMNS, "_wsalt")
         return clustered.drop("_wsalt").sortWithinPartitions(*WRITE_SORT_COLUMNS)
 

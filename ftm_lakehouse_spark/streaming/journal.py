@@ -2,16 +2,21 @@
 as Structured Streaming.
 
 The reference journal (/root/reference/ftm_lakehouse/storage/journal/
-sql.py) existed for two semantics — crash-safe buffering and in-window
-dedup by ``(id, fragment)``. Structured Streaming supplies both:
-checkpointed exactly-once ``foreachBatch`` sinks replace the
-yield→write→delete durability dance, and watermarked
-``dropDuplicates`` replaces the upsert's conflict clause
-(SURVEY §2.9 I1).
+sql.py) existed for two semantics — crash-safe buffering and dedup by
+``(id, fragment)`` (its ``ON CONFLICT ... DO UPDATE`` upsert).
+Structured Streaming supplies the first: checkpointed ``foreachBatch``
+sinks, fenced by the commit log's ``(txnAppId, epoch)`` idempotent
+append, replace the yield→write→delete durability dance. The second is
+the merge's rule (SURVEY §2.9 I1): each micro-batch is appended
+through :func:`~ftm_lakehouse_spark.operators.merge.canonicalize`, so
+in-batch duplicates collapse before they land, and a statement re-sent
+in a later micro-batch is one more raw row that the next merge
+resolves by latest ``last_seen`` — the same answer the batch append
+path gives. The query is stateless: no state store, no watermark.
 
-``StreamingJournal`` tails a directory of statement parquet/json drops
-(the cluster equivalent would be Kafka — same code, different
-``readStream.format``) and appends deduped micro-batches to a
+``StreamingJournal`` tails a directory of statement parquet drops (the
+cluster equivalent would be Kafka — same code, different
+``readStream.format``) and appends canonical micro-batches to a
 StatementStore.
 """
 
@@ -21,6 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ftm_lakehouse_spark.model.statement import STATEMENT_SCHEMA
+from ftm_lakehouse_spark.operators.merge import canonicalize
 from ftm_lakehouse_spark.sources.statement_store import StatementStore
 
 __all__ = ["StreamingJournal"]
@@ -41,53 +47,10 @@ class StreamingJournal:
         self.checkpoint_dir = checkpoint_dir
         self.watermark = watermark
 
-    def _state_partitions(self) -> int:
-        """State-store partition count for a FRESH checkpoint, derived
-        from the bytes actually present in the source directory
-        (round-13, VERDICT r12 item 4). The stateful dedup's shuffle
-        partition count is pinned into the checkpoint at first start,
-        and every micro-batch pays an init+commit per RocksDB instance
-        — a fixed cost that dwarfs tiny batches (32 stores for a few
-        hundred KB of drops at bench SF) and is exactly right for a
-        backfill-sized feed. One partition per ~32 MB of source, capped
-        at the session's configured shuffle partitions (the cluster
-        ceiling), floor 1: small feeds get small state machinery, large
-        feeds keep the configured parallelism — no local-only constant.
-        Restarts are unaffected: Spark recovers the pinned count from
-        the checkpoint's offset metadata, overriding the session conf.
-        The listing early-stops once the cap is reached, so a 100 TB
-        source never pays a full recursive listing here."""
-        conf_n = int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        target = 32 * 1024 * 1024
-        try:
-            jvm = self.spark._jvm
-            path = jvm.org.apache.hadoop.fs.Path(self.source_dir)
-            fs = path.getFileSystem(self.spark._jsc.hadoopConfiguration())
-            if not fs.exists(path):
-                return conf_n
-            size = 0
-            it = fs.listFiles(path, True)
-            while it.hasNext():
-                size += it.next().getLen()
-                if size >= conf_n * target:
-                    return conf_n
-            return max(1, min(conf_n, -(-size // target)))
-        except Exception:  # pragma: no cover - foreign FS hiccups
-            return conf_n
-
     def start(self, trigger_once: bool = False):
         """Begin tailing the source directory. ``trigger_once`` drains
         what is present and stops (the batch-incremental mode the
         reference's ``flush()`` implements destructively)."""
-        stream = (
-            self.spark.readStream.schema(STATEMENT_SCHEMA)
-            .parquet(self.source_dir)
-            .withWatermark("last_seen", self.watermark)
-            # in-window dedup: last write wins per (id, fragment, origin),
-            # matching the journal's ON CONFLICT (id, fragment) DO UPDATE
-            .dropDuplicatesWithinWatermark(["id", "fragment", "origin"])
-        )
-
         # exactly-once: foreachBatch is at-least-once (a crash between
         # the write and the checkpoint advance replays the epoch), so
         # the append is fenced by (query identity, epoch) — the commit
@@ -96,46 +59,17 @@ class StreamingJournal:
         txn_app = f"journal:{self.checkpoint_dir}"
 
         def sink(batch_df, epoch: int) -> None:
-            if self.store.commits.txn_version(txn_app) >= epoch:
-                # Replayed epoch (crash landed between the store commit
-                # and the checkpoint advance). The batch must still be
-                # consumed IN FULL: Spark validates that foreachBatch
-                # processed every partition before committing the
-                # upstream state stores (STATE_STORE_COMMIT_VALIDATION
-                # on 4.x), and the dropDuplicatesWithinWatermark state
-                # rides on that commit — an early return here wedges
-                # the stream on restart (caught by
-                # tests/test_streaming_recovery.py).
-                batch_df.write.format("noop").mode("overwrite").save()
-                return
-            # the single-pass append executes the stateful micro-batch
-            # plan exactly ONCE, inside the stage write job (round-12,
-            # guide §1.2); that job consumes every partition even for an
-            # empty batch, satisfying the state-store commit validation
-            # (the pre-change isEmpty() + noop-write pair replayed the
-            # plan, and its RocksDB state load, up to two extra times
-            # per epoch).
-            self.store.append(batch_df, txn=(txn_app, epoch), streaming=True)
+            self.store.append(canonicalize(batch_df), txn=(txn_app, epoch))
 
         writer = (
-            stream.writeStream.foreachBatch(sink)
+            self.spark.readStream.schema(STATEMENT_SCHEMA)
+            .parquet(self.source_dir)
+            .writeStream.foreachBatch(sink)
             .option("checkpointLocation", self.checkpoint_dir)
-            .outputMode("append")
         )
         if trigger_once:
             writer = writer.trigger(availableNow=True)
-        # Pin the data-adaptive state partition count for the duration
-        # of query start only: StreamExecution clones the session state
-        # synchronously inside start(), and a stateful query recovers
-        # the count from its checkpoint on every later start, so the
-        # temporary session-conf write cannot leak into other queries.
-        key = "spark.sql.shuffle.partitions"
-        old = self.spark.conf.get(key)
-        self.spark.conf.set(key, str(self._state_partitions()))
-        try:
-            return writer.start()
-        finally:
-            self.spark.conf.set(key, old)
+        return writer.start()
 
     def windowed_stats(self, window: str = "5 minutes"):
         """Streaming per-window ingest statistics (watermarked windowed

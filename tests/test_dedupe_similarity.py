@@ -168,6 +168,44 @@ def test_streaming_journal(spark, tmp_path):
     assert len(out) == 2  # the duplicate was dropped in-window
 
 
+def test_streaming_journal_resend_equals_batch(spark, tmp_path):
+    """A statement re-sent in a later micro-batch with a newer
+    ``last_seen`` resolves exactly as the batch append path does: after
+    the merge the latest ``last_seen`` wins, whichever path wrote it."""
+    from ftm_lakehouse_spark.model.dataset import DatasetConfig
+    from ftm_lakehouse_spark.sources.statement_store import StatementStore
+    from ftm_lakehouse_spark.streaming.journal import StreamingJournal
+
+    from .helpers import make_df, stmt
+
+    waves = [
+        [stmt(id="a", last_seen="2024-01-01T00:00:00"),
+         stmt(id="b", entity_id="e2", value="v2")],
+        [stmt(id="a", last_seen="2024-02-01T00:00:00")],
+    ]
+
+    def live(store):
+        return sorted(
+            (r.asDict(recursive=True) for r in store.live().collect()),
+            key=lambda d: d["id"],
+        )
+
+    src = str(tmp_path / "journal-in")
+    stream = StatementStore(spark, str(tmp_path / "stream"), DatasetConfig(name="s1"))
+    journal = StreamingJournal(spark, stream, src, str(tmp_path / "ckpt"))
+    batch = StatementStore(spark, str(tmp_path / "batch"), DatasetConfig(name="s1"))
+    for rows in waves:
+        make_df(spark, rows).coalesce(1).write.mode("append").parquet(src)
+        journal.start(trigger_once=True).awaitTermination(120)
+        batch.append(make_df(spark, rows))
+    stream.merge(force=True)
+    batch.merge(force=True)
+
+    got = live(stream)
+    assert got == live(batch)
+    assert [str(r["last_seen"])[:10] for r in got if r["id"] == "a"] == ["2024-02-01"]
+
+
 def test_embedding_near_dups(vectors):
     from ftm_lakehouse_spark.operators.dedupe import embedding_near_dups
 

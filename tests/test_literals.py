@@ -8,6 +8,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
+import pytest
 from pyspark.sql import functions as F
 
 from ftm_lakehouse_spark.functions.literals import (
@@ -71,3 +72,26 @@ def test_str_array_matches(spark):
     vals = list(ADVERSARIAL) + list(ADVERSARIAL.values())
     assert _one(spark, lit_str_array(vals)) == vals
     assert _one(spark, lit_str_array([])) == []
+
+
+def test_empty_maps_keep_their_types(spark):
+    df = spark.range(1).select(
+        lit_str_array_map({}).alias("am"), lit_str_int_map({}).alias("im")
+    )
+    assert df.schema["am"].dataType.simpleString() == "map<string,array<string>>"
+    assert df.schema["im"].dataType.simpleString() == "map<string,int>"
+    assert df.first().asDict() == {"am": {}, "im": {}}
+
+
+def test_get_spark_refuses_escaped_string_literals(spark):
+    from ftm_lakehouse_spark.session import get_spark
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        # same arguments as the session fixture: getOrCreate returns it
+        with pytest.raises(ValueError, match="escapedStringLiterals"):
+            get_spark("tests", shuffle_partitions=8)
+    finally:
+        spark.conf.unset(key)
+    assert get_spark("tests", shuffle_partitions=8) is spark

@@ -167,12 +167,12 @@ def test_crash_mid_pipeline_full_composition(spark, tmp_path):
         mv = IncrementalAggregate(
             store, str(tmp_path / f"{tag}-mv"), keys=["schema"]
         )
-        # wave 1 (with an intra-wave duplicate the watermark dedup eats)
+        # wave 1 (with an intra-wave duplicate the in-batch collapse eats)
         make_df(spark, ROWS1 + [ROWS1[0]]).coalesce(1).write.parquet(src)
         _drain(spark, store, src, ckpt)
         mv.refresh()
-        # wave 2 re-emits a wave-1 row: cross-batch dedup state must
-        # drop it even across the crash/restart below
+        # wave 2 re-emits a wave-1 row: the merge must collapse it
+        # even across the crash/restart below
         make_df(spark, ROWS2 + [ROWS1[1]]).coalesce(1).write.mode(
             "append"
         ).parquet(src)
