@@ -1,18 +1,34 @@
-"""Near-duplicate detection operators for training-data pipelines.
+"""Duplicate and near-duplicate detection operators for training-data
+pipelines.
 
-Four tiers, in increasing recall/cost:
+Operator families, in increasing recall/cost:
 
-1. **exact** — content-hash groupBy (one shuffle on a 32-byte key);
-2. **fingerprint** — token-set hash groupBy (word-order invariant);
-3. **MinHash + LSH** — shingle → signature → banded bucket join →
-   per-bucket candidate pairs → exact Jaccard verify. The classic
-   Broder scheme: pair space collapses from O(n²) to the bucket
-   collisions, all expressible as explode + self-join + groupBy;
-4. **SimHash** — 64-bit Charikar hash via per-token md5 bit voting;
-   hamming-close pairs found by probing rotated prefix blocks.
+1. **Exact** — :func:`exact_duplicates` (content-hash window),
+   :func:`fingerprint_duplicates` (token-set hash groupBy, word-order
+   invariant) and :func:`duplicate_chunks` (passage-level chunk
+   hashes). One shuffle on a narrow hash key each.
+2. **Blocked near-duplicate tiers** — :func:`minhash_lsh_pairs`
+   (banded MinHash, Jaccard verify), :func:`simhash_duplicates`
+   (Charikar :func:`simhash`, pigeonhole block probe, hamming verify),
+   :func:`ngram_jaccard_pairs` (prefix blocking key, exact n-gram
+   Jaccard), :func:`embedding_near_dups` (hyperplane-LSH blocking,
+   exact cosine) and :func:`semantic_dedup_pairs` (k-means cell
+   blocking, exact cosine; :func:`semantic_dedup_keep` applies the
+   keeper policy). All five are one filter-verify pipeline: collapse
+   exact copies to value grain (:func:`_value_groups`), equi-join on
+   the tier's blocking key, verify the candidates with the tier's
+   score, and expand surviving representative pairs to member pairs
+   (:func:`_expand_members`). Each tier owns only its blocking key,
+   verify expression and self-score.
+3. **Clusters** — :func:`connected_components` (hash-min label
+   propagation) and :func:`minhash_cluster_canonical`, which runs it
+   over the value-grain MinHash edges.
+4. **Substring overlap** — :func:`winnow_fingerprint_pairs` (MOSS
+   winnowing) and :func:`benchmark_overlap` (benchmark
+   decontamination by shared n-gram shingles).
 
 Scale notes (100 TB): every stage is a projection or a key-partitioned
-shuffle; nothing collects to the driver. The LSH bucket join salts
+shuffle; nothing collects to the driver. The blocking joins salt
 naturally (bucket keys are hashes); ``spark.sql.adaptive.skewJoin``
 covers pathological buckets (e.g. boilerplate-heavy corpora).
 """
@@ -49,6 +65,7 @@ __all__ = [
     "simhash",
     "simhash_duplicates",
     "ngram_jaccard_pairs",
+    "embedding_near_dups",
     "benchmark_overlap",
     "duplicate_chunks",
     "winnow_fingerprint_pairs",
@@ -82,6 +99,88 @@ def fingerprint_duplicates(
     )
 
 
+def _value_groups(frame: DataFrame, value: str, *extra_aggs) -> DataFrame:
+    """Exact-duplicate pre-collapse of a blocked dedup tier: ``frame``'s
+    ``doc`` ids grouped by the ``value`` they are scored on, as
+    (value, rep, *extra_aggs, members) with ``rep`` the min member.
+
+    Introduced after the sf1 sweep measured semantic dedup super-linear
+    under replication: a web-scale corpus carries every popular text or
+    vector in MANY exact copies, and a candidate join at doc grain then
+    computes the SAME score once per copy-pair — quadratic in the
+    duplication factor. Every blocking key and score in this module is a
+    pure function of the value, so exact copies share every candidate.
+    Grouping by the value itself (no hash, no collision risk) runs the
+    candidate join and verify once per DISTINCT value; the member pairs
+    are expanded afterwards by :func:`_expand_members`. Bit-identical
+    output (same value → same fold), distance work linear in distinct
+    values, and only the unavoidable output expansion quadratic in
+    duplication."""
+    return (
+        frame.groupBy(value)
+        .agg(
+            F.min("doc").alias("rep"),
+            *extra_aggs,
+            F.sort_array(F.collect_list("doc")).alias("members"),
+        )
+        .localCheckpoint(eager=False, storageLevel=_DISK)
+    )
+
+
+def _with_members(rep_pairs: DataFrame, grp: DataFrame) -> DataFrame:
+    """Attach each side's member list (``ma``, ``mb``) to the verified
+    representative pairs (ra, rb, ...)."""
+    return rep_pairs.join(
+        grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
+    ).join(grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb")
+
+
+def _expand_members(
+    cross: DataFrame, within: DataFrame, cols: list, op: str, allow_quadratic: bool
+) -> DataFrame:
+    """Member-pair expansion of a blocked tier: (a, b, *cols) with a < b.
+
+    ``cross`` is the output of :func:`_with_members`: every member of
+    the a-group pairs with every member of the b-group, the score
+    ``cols`` shared (identical values). Groups are disjoint, so
+    least/greatest restores the a < b contract of the doc-grain
+    formulation. ``within`` holds the duplicate groups (``members`` plus
+    ``cols``) that already passed the tier's own self-score threshold;
+    every i < j member pair of such a group is a candidate too. Both
+    expansions are guarded by :func:`_expansion_guard_filter`."""
+    cross = (
+        _expansion_guard_filter(
+            cross, F.size("ma").cast("bigint") * F.size("mb"), op, allow_quadratic
+        )
+        .select(*cols, F.explode("ma").alias("i"), "mb")
+        .select(*cols, "i", F.explode("mb").alias("j"))
+        .select(F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b"), *cols)
+    )
+    within = (
+        _expansion_guard_filter(
+            within,
+            F.size("members").cast("bigint") * F.size("members"),
+            op,
+            allow_quadratic,
+        )
+        .select(*cols, F.explode("members").alias("i"), "members")
+        .select(*cols, "i", F.explode("members").alias("j"))
+        .filter(F.col("i") < F.col("j"))
+        .select(F.col("i").alias("a"), F.col("j").alias("b"), *cols)
+    )
+    return cross.select("a", "b", *cols).unionByName(within)
+
+
+def _jaccard(a, b):
+    """Exact Jaccard of two array columns, rounded to 6 places. A
+    duplicate group's self-score goes through the SAME expression (1.0
+    for any non-empty set) rather than being assumed, so an
+    engine-rounding change can never make the two paths diverge."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    union = F.size(F.array_union(a, b)).cast("double")
+    return F.round(inter / union, 6)
+
+
 def _minhash_value_stage(
     docs: DataFrame,
     id_col: str,
@@ -101,25 +200,13 @@ def _minhash_value_stage(
     (ra, rb, jaccard)."""
     rows = num_hashes // bands
     par = docs.sparkSession.sparkContext.defaultParallelism
-    # Exact-duplicate pre-collapse (round-4 pattern, see
-    # semantic_dedup_pairs): shingles — and therefore signatures, band
-    # keys, and every candidate — are pure functions of the text, so
-    # exact copies are grouped by the text VALUE first; the banded join
-    # and Jaccard verify run once per DISTINCT text, and member pairs
-    # are expanded afterwards. Bit-identical output; under web-scale
-    # duplication the per-bucket pair load drops from quadratic in
-    # copies to quadratic in distinct texts.
-    grp = (
+    grp = _value_groups(
         # the shingle/signature projections are CPU-bound: spread the
         # corpus across cores even when the source is one small file
-        docs.repartition(par)
-        .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
-        .groupBy("text")
-        .agg(
-            F.min("doc").alias("rep"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+        docs.repartition(par).select(
+            F.col(id_col).alias("doc"), F.col(text_col).alias("text")
+        ),
+        "text",
     )
     base = (
         # explicit repartition between the collapse and the projection:
@@ -177,10 +264,8 @@ def _minhash_value_stage(
         cand.join(base.select(F.col("doc").alias("a"), F.col("shingles").alias("sa")), "a")
         .join(base.select(F.col("doc").alias("b"), F.col("shingles").alias("sb")), "b")
     )
-    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
-    union = F.size(F.array_union("sa", "sb")).cast("double")
     rep_pairs = (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
+        pairs.withColumn("jaccard", _jaccard("sa", "sb"))
         .filter(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("a").alias("ra"), F.col("b").alias("rb"), "jaccard")
     )
@@ -210,48 +295,18 @@ def minhash_lsh_pairs(
         docs, id_col, text_col, num_hashes, bands, shingle_words,
         jaccard_threshold,
     )
-    cross = (
-        _expansion_guard_filter(
-            rep_pairs.join(
-                grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
-            ).join(
-                grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb"
-            ),
-            F.size("ma").cast("bigint") * F.size("mb"),
-            "minhash_lsh_pairs",
-            allow_quadratic,
-        )
-        .select("jaccard", F.explode("ma").alias("i"), "mb")
-        .select("jaccard", "i", F.explode("mb").alias("j"))
-        .select(
-            F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b"), "jaccard"
-        )
-    )
     # within a duplicate group every pair is a candidate (identical
-    # signatures share all bands); the self-Jaccard is computed with
-    # the SAME expressions (1.0 for any non-empty shingle set), not
-    # assumed, so an engine-rounding change could never diverge
-    self_j = F.round(
-        F.size(F.array_intersect("shingles", "shingles")).cast("double")
-        / F.size(F.array_union("shingles", "shingles")).cast("double"),
-        6,
-    )
+    # signatures share all bands)
     within = (
-        _expansion_guard_filter(
-            base.join(grp.select(F.col("rep").alias("doc"), "members"), "doc")
-            .filter(F.size("members") > 1),
-            F.size("members").cast("bigint") * F.size("members"),
-            "minhash_lsh_pairs",
-            allow_quadratic,
-        )
-        .select("members", self_j.alias("jaccard"))
+        base.join(grp.select(F.col("rep").alias("doc"), "members"), "doc")
+        .filter(F.size("members") > 1)
+        .select("members", _jaccard("shingles", "shingles").alias("jaccard"))
         .filter(F.col("jaccard") >= jaccard_threshold)
-        .select("jaccard", F.explode("members").alias("i"), "members")
-        .select("jaccard", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select(F.col("i").alias("a"), F.col("j").alias("b"), "jaccard")
     )
-    return cross.select("a", "b", "jaccard").unionByName(within)
+    return _expand_members(
+        _with_members(rep_pairs, grp), within, ["jaccard"], "minhash_lsh_pairs",
+        allow_quadratic,
+    )
 
 
 def simhash(text_col, bits: int = 48):
@@ -374,25 +429,18 @@ def simhash_duplicates(
     :data:`MAX_EXPANSION_PAIRS` — pass ``allow_quadratic=True`` for a
     deliberate full-pair run (the estimate reuses the layout
     aggregates, so the guard adds no job)."""
-    width = bits // blocks
+    from ftm_lakehouse_spark.operators.similarity import _sig_chunks
+
     par = docs.sparkSession.sparkContext.defaultParallelism
-    # exact-duplicate pre-collapse (round-4 pattern, see
-    # minhash_lsh_pairs): the simhash is a pure function of the text,
-    # so copies group first, the probe join and hamming verify run per
-    # DISTINCT text, and member pairs expand afterwards; the explicit
-    # repartition keeps the CPU-heavy signature fold off the
-    # AQE-coalesced post-groupBy layout
-    grp = (
-        docs.repartition(par)
-        .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
-        .groupBy("text")
-        .agg(
-            F.min("doc").alias("rep"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+    grp = _value_groups(
+        docs.repartition(par).select(
+            F.col(id_col).alias("doc"), F.col(text_col).alias("text")
+        ),
+        "text",
     )
     sh = (
+        # the explicit repartition keeps the CPU-heavy signature fold
+        # off the AQE-coalesced post-groupBy layout
         grp.repartition(par)
         .select(F.col("rep").alias("doc"), simhash(F.col("text"), bits).alias("sh"))
         # three consumers (both probe sides + the within-group branch):
@@ -400,21 +448,7 @@ def simhash_duplicates(
         .localCheckpoint(eager=False, storageLevel=_DISK)
     )
     chunked = sh.select(
-        "doc",
-        "sh",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("block"),
-                        F.shiftrightunsigned(F.col("sh"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("c"),
+        "doc", "sh", _sig_chunks(F.col("sh"), bits, blocks - 1).alias("c")
     ).select("doc", "sh", F.col("c.block").alias("block"), F.col("c.chunk").alias("chunk"))
     l, r = chunked.alias("l"), chunked.alias("r")
     # hamming is a cheap pure function of the pair (xor + popcount), so
@@ -495,45 +529,27 @@ def simhash_duplicates(
         _guard_quadratic(
             est + int(g_stats["m2"] or 0), "simhash_duplicates", allow_quadratic
         )
-    cross_pre = (
-        rep_pairs.join(
-            grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
-        )
-        .join(
-            grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb"
-        )
-    )
+    cross = _with_members(rep_pairs, grp)
     if heavy_copies and est > 8 * _target:
-        cross_pre = cross_pre.repartition(
-            int(min(4096, max(par, est // _target)))
-        )
-    cross = (
-        cross_pre.select("hamming", F.explode("ma").alias("i"), "mb")
-        .select("hamming", "i", F.explode("mb").alias("j"))
-        .select(
-            F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b"), "hamming"
-        )
-    )
+        cross = cross.repartition(int(min(4096, max(par, est // _target))))
     # within a duplicate group: identical text → identical simhash →
     # hamming 0, computed with the same expression rather than assumed
     self_h = F.bit_count(F.col("sh").bitwiseXOR(F.col("sh")))
-    within_pre = (
+    within = (
         sh.join(grp.select(F.col("rep").alias("doc"), "members"), "doc")
         .filter(F.size("members") > 1)
         .select("members", self_h.alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
     if heavy_copies and (g_stats["m2"] or 0) > 8 * _target:
-        within_pre = within_pre.repartition(
+        within = within.repartition(
             int(min(4096, max(par, (g_stats["m2"] or 0) // _target)))
         )
-    within = (
-        within_pre.select("hamming", F.explode("members").alias("i"), "members")
-        .select("hamming", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select(F.col("i").alias("a"), F.col("j").alias("b"), "hamming")
+    # the exact total already passed _guard_quadratic above (or every
+    # group is a singleton), so the row-local guard is not needed
+    return _expand_members(
+        cross, within, ["hamming"], "simhash_duplicates", allow_quadratic=True
     )
-    return cross.select("a", "b", "hamming").unionByName(within)
 
 
 def ngram_jaccard_pairs(
@@ -552,20 +568,14 @@ def ngram_jaccard_pairs(
     unless ``allow_quadratic=True``."""
     toks = tokens(F.col("text"))
     par = docs.sparkSession.sparkContext.defaultParallelism
-    # exact-duplicate pre-collapse + post-collapse repartition (round-4
-    # pattern, see minhash_lsh_pairs): shingles and the blocking key
-    # are pure functions of the text
-    grp = (
-        docs.repartition(par)
-        .select(F.col(id_col).alias("doc"), F.col(text_col).alias("text"))
-        .groupBy("text")
-        .agg(
-            F.min("doc").alias("rep"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+    grp = _value_groups(
+        docs.repartition(par).select(
+            F.col(id_col).alias("doc"), F.col(text_col).alias("text")
+        ),
+        "text",
     )
     base = (
+        # post-collapse repartition: see _minhash_value_stage
         grp.repartition(par)
         .select(
             F.col("rep").alias("doc"),
@@ -576,55 +586,25 @@ def ngram_jaccard_pairs(
         .localCheckpoint(eager=False, storageLevel=_DISK)
     )
     l, r = base.alias("l"), base.alias("r")
-    inter = F.size(F.array_intersect("l.sh", "r.sh")).cast("double")
-    union = F.size(F.array_union("l.sh", "r.sh")).cast("double")
     rep_pairs = (
         l.join(r, (F.col("l.block") == F.col("r.block")) & (F.col("l.doc") < F.col("r.doc")))
         .select(
             F.col("l.doc").alias("ra"),
             F.col("r.doc").alias("rb"),
-            F.round(inter / union, 6).alias("jaccard"),
+            _jaccard("l.sh", "r.sh").alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-    )
-    cross = (
-        _expansion_guard_filter(
-            rep_pairs.join(
-                grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
-            ).join(
-                grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb"
-            ),
-            F.size("ma").cast("bigint") * F.size("mb"),
-            "ngram_jaccard_pairs",
-            allow_quadratic,
-        )
-        .select("jaccard", F.explode("ma").alias("i"), "mb")
-        .select("jaccard", "i", F.explode("mb").alias("j"))
-        .select(
-            F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b"), "jaccard"
-        )
-    )
-    self_j = F.round(
-        F.size(F.array_intersect("sh", "sh")).cast("double")
-        / F.size(F.array_union("sh", "sh")).cast("double"),
-        6,
     )
     within = (
-        _expansion_guard_filter(
-            base.join(grp.select(F.col("rep").alias("doc"), "members"), "doc")
-            .filter(F.size("members") > 1),
-            F.size("members").cast("bigint") * F.size("members"),
-            "ngram_jaccard_pairs",
-            allow_quadratic,
-        )
-        .select("members", self_j.alias("jaccard"))
+        base.join(grp.select(F.col("rep").alias("doc"), "members"), "doc")
+        .filter(F.size("members") > 1)
+        .select("members", _jaccard("sh", "sh").alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
-        .select("jaccard", F.explode("members").alias("i"), "members")
-        .select("jaccard", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select(F.col("i").alias("a"), F.col("j").alias("b"), "jaccard")
     )
-    return cross.select("a", "b", "jaccard").unionByName(within)
+    return _expand_members(
+        _with_members(rep_pairs, grp), within, ["jaccard"], "ngram_jaccard_pairs",
+        allow_quadratic,
+    )
 
 
 def embedding_near_dups(
@@ -647,25 +627,11 @@ def embedding_near_dups(
     cosine then filters to ``>= threshold``. Returns (a, b, cosine).
     """
     from ftm_lakehouse_spark.functions.vectors import dot_product, l2_norm
-    from ftm_lakehouse_spark.operators.similarity import hyperplane_signature
+    from ftm_lakehouse_spark.operators.similarity import _sig_chunks, hyperplane_signature
 
-    blocks = max_hamming + 1
-    width = num_bits // blocks
     sig = hyperplane_signature(F.col("vec"), num_bits, dim)
-    # Exact-duplicate pre-collapse (same round-4 pattern as
-    # semantic_dedup_pairs): signature and norm are pure functions of
-    # the vector, so exact copies share every chunk and every
-    # candidate — group by the vector VALUE, verify once per distinct
-    # pair, expand to member pairs afterwards. Bit-identical output;
-    # distance work linear in distinct vectors.
-    grp = (
-        vectors.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("vec"))
-        .groupBy("vec")
-        .agg(
-            F.min("doc").alias("rep"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+    grp = _value_groups(
+        vectors.select(F.col(id_col).alias("doc"), F.col(vec_col).alias("vec")), "vec"
     )
     # norm once per VECTOR (n rows), not per candidate pair (~n²/buckets
     # rows) — cosine(a,b) = dot(a,b)/(|a|·|b|) is float-identical either
@@ -684,21 +650,7 @@ def embedding_near_dups(
         .localCheckpoint(eager=False, storageLevel=_DISK)
     )
     chunked = base.select(
-        "doc",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("block"),
-                        F.shiftrightunsigned(F.col("sig"), b * width)
-                        .bitwiseAND(F.lit((1 << width) - 1))
-                        .alias("chunk"),
-                    )
-                    for b in range(blocks)
-                ]
-            )
-        ).alias("c"),
+        "doc", "sig", _sig_chunks(F.col("sig"), num_bits, max_hamming).alias("c")
     ).select("doc", F.col("c.block").alias("block"), F.col("c.chunk").alias("chunk"))
     cand = (
         chunked.alias("l")
@@ -745,46 +697,23 @@ def embedding_near_dups(
         .filter(F.col("cosine") >= threshold)
         .select(F.col("a").alias("ra"), F.col("b").alias("rb"), "cosine")
     )
-    cross = (
-        _expansion_guard_filter(
-            rep_pairs.join(
-                grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
-            ).join(
-                grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb"
-            ),
-            F.size("ma").cast("bigint") * F.size("mb"),
-            "embedding_near_dups",
-            allow_quadratic,
-        )
-        .select("cosine", F.explode("ma").alias("i"), "mb")
-        .select("cosine", "i", F.explode("mb").alias("j"))
-        .select(
-            F.least("i", "j").alias("a"), F.greatest("i", "j").alias("b"), "cosine"
-        )
-    )
     self_cos = F.round(
         dot_product(F.col("vec"), F.col("vec"))
         / (l2_norm(F.col("vec")) * l2_norm(F.col("vec"))),
         6,
     )
     within = (
-        _expansion_guard_filter(
-            grp.filter(F.size("members") > 1),
-            F.size("members").cast("bigint") * F.size("members"),
-            "embedding_near_dups",
-            allow_quadratic,
-        )
+        grp.filter(F.size("members") > 1)
         # zero-norm guard (see rep_pairs): self-cosine of a zero vector
         # is NaN, which Spark orders above the threshold
         .filter(dot_product(F.col("vec"), F.col("vec")) > 0)
         .select("members", self_cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("cosine", F.explode("members").alias("i"), "members")
-        .select("cosine", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select(F.col("i").alias("a"), F.col("j").alias("b"), "cosine")
     )
-    return cross.select("a", "b", "cosine").unionByName(within)
+    return _expand_members(
+        _with_members(rep_pairs, grp), within, ["cosine"], "embedding_near_dups",
+        allow_quadratic,
+    )
 
 
 def connected_components(
@@ -1201,27 +1130,11 @@ def semantic_dedup_pairs(
         F.col("centroid").alias("cell"),
         l2_norm(F.col(vec_col)).alias("norm"),
     )
-    # Exact-duplicate pre-collapse (round-4, after the sf1 sweep
-    # measured this operator super-linear under replication): a
-    # web-scale corpus carries every popular vector in MANY exact
-    # copies, and the within-cell pair join then computes the SAME
-    # cosine once per copy-pair — quadratic in the duplication factor.
-    # Group by the vector VALUE itself (no hash, no collision risk):
     # exact copies share a cell (the argmin assignment is a pure
-    # function of the vector), so each distinct-vector pair's cosine
-    # is computed ONCE on representatives and expanded to member pairs
-    # afterwards — bit-identical output (same arrays → same fold),
-    # with the distance work linear in DISTINCT vectors and only the
-    # unavoidable output expansion quadratic in duplication.
-    grp = (
-        base.groupBy("vec")
-        .agg(
-            F.min("doc").alias("rep"),
-            F.first("cell").alias("cell"),
-            F.first("norm").alias("norm"),
-            F.sort_array(F.collect_list("doc")).alias("members"),
-        )
-        .localCheckpoint(eager=False, storageLevel=_DISK)
+    # function of the vector), so the first cell/norm of a group is its
+    # only one
+    grp = _value_groups(
+        base, "vec", F.first("cell").alias("cell"), F.first("norm").alias("norm")
     )
     reps = grp.select("rep", "vec", "cell", "norm")
     # candidate generation moves only (rep, cell): the cell key has k
@@ -1265,54 +1178,22 @@ def semantic_dedup_pairs(
         .filter(F.col("cosine") >= threshold)
         .select("ra", "rb", "cell", "cosine")
     )
-    # expansion 1: each surviving representative pair → all (member of
-    # a-group) × (member of b-group) id pairs, the attached cosine
-    # shared (identical arrays). Groups are disjoint, so least/greatest
-    # restores the a < b contract of the pre-collapse formulation.
-    cross = (
-        _expansion_guard_filter(
-            rep_pairs.join(
-                grp.select(F.col("rep").alias("ra"), F.col("members").alias("ma")), "ra"
-            ).join(
-                grp.select(F.col("rep").alias("rb"), F.col("members").alias("mb")), "rb"
-            ),
-            F.size("ma").cast("bigint") * F.size("mb"),
-            "semantic_dedup_pairs",
-            allow_quadratic,
-        )
-        .select("cell", "cosine", F.explode("ma").alias("i"), "mb")
-        .select("cell", "cosine", "i", F.explode("mb").alias("j"))
-        .select(
-            F.least("i", "j").alias("a"),
-            F.greatest("i", "j").alias("b"),
-            "cell",
-            "cosine",
-        )
-    )
-    # expansion 2: within a duplicate group every id pair is a
-    # candidate too (the original join emitted them); one self-cosine
-    # per group (≈1.0 up to the fold's rounding — computed, not
-    # assumed, to stay bit-identical), expanded to i < j member pairs.
+    # one self-cosine per duplicate group (≈1.0 up to the fold's
+    # rounding — computed, not assumed, to stay bit-identical)
     self_cos = F.round(
         dot_product(F.col("vec"), F.col("vec")) / (F.col("norm") * F.col("norm")), 6
     )
     within = (
-        _expansion_guard_filter(
-            grp.filter(F.size("members") > 1),
-            F.size("members").cast("bigint") * F.size("members"),
-            "semantic_dedup_pairs",
-            allow_quadratic,
-        )
+        grp.filter(F.size("members") > 1)
         # zero-norm guard (see embedding_near_dups)
         .filter(F.col("norm") > 0)
         .select("cell", "members", self_cos.alias("cosine"))
         .filter(F.col("cosine") >= threshold)
-        .select("cell", "cosine", F.explode("members").alias("i"), "members")
-        .select("cell", "cosine", "i", F.explode("members").alias("j"))
-        .filter(F.col("i") < F.col("j"))
-        .select(F.col("i").alias("a"), F.col("j").alias("b"), "cell", "cosine")
     )
-    return cross.select("a", "b", "cell", "cosine").unionByName(within)
+    return _expand_members(
+        _with_members(rep_pairs, grp), within, ["cell", "cosine"],
+        "semantic_dedup_pairs", allow_quadratic,
+    )
 
 
 def semantic_dedup_keep(

@@ -802,6 +802,14 @@ def test_quadratic_expansion_guard(spark, monkeypatch):
     # explicit opt-in runs and produces the full expansion
     assert dd.simhash_duplicates(copies, allow_quadratic=True).count() == 190
     assert dd.minhash_lsh_pairs(copies, allow_quadratic=True).count() == 190
+    assert dd.ngram_jaccard_pairs(copies, allow_quadratic=True).count() == 190
+    assert dd.embedding_near_dups(vecs, dim=4, allow_quadratic=True).count() == 190
+    assert (
+        dd.semantic_dedup_pairs(
+            vecs, centroids=[[1.0, 0.5, 0.25, 0.125]], allow_quadratic=True
+        ).count()
+        == 190
+    )
     # small corpora stay under the real threshold: default still works
     monkeypatch.setattr(dd, "MAX_EXPANSION_PAIRS", 2_000_000_000)
     assert dd.minhash_lsh_pairs(copies).count() == 190

@@ -289,6 +289,32 @@ def test_semantic_dedup_join_is_equi(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_minhash_band_join_is_narrow(spark):
+    """PLANS.md dedup_minhash_lsh: the bucket self-join keyed on
+    (band, key) carries only (doc, band, key) on both sides; the
+    shingle arrays re-attach to the surviving candidate pairs only. A
+    wide side would drag every document's shingle set through the
+    bucket-collision join."""
+    df = QUERIES["dedup_minhash_lsh"][0](spark, SF)
+
+    def nodes(node):
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from nodes(kids.apply(i))
+
+    band_joins = []
+    for node in nodes(df._jdf.queryExecution().sparkPlan()):
+        desc = node.simpleString(100)
+        if "Join" in node.nodeName() and "band#" in desc and "key#" in desc:
+            band_joins.append(node)
+    assert len(band_joins) == 1
+    for side in (band_joins[0].left(), band_joins[0].right()):
+        out = side.output()
+        names = {out.apply(i).name() for i in range(out.size())}
+        assert names == {"doc", "band", "key"}
+
+
 def _n_exchanges(plan: str) -> int:
     # count Exchange operator detail headers ("(7) Exchange"), not the
     # tree-summary duplicates
