@@ -33,8 +33,6 @@ from ftm_lakehouse_spark.model.dataset import DatasetConfig, validate_origin
 from ftm_lakehouse_spark.model.statement import (
     CSV_COLUMNS,
     STATEMENT_SCHEMA,
-    live_filter,
-    with_canonical_id,
 )
 from ftm_lakehouse_spark.operators.aggregate import assemble_entities
 from ftm_lakehouse_spark.operators.explode import ENTITY_SCHEMA, explode_entities
@@ -126,11 +124,11 @@ class Dataset:
         the table at a past commit version (Delta ``versionAsOf``; the
         reference rides delta-rs for this, repository/diff.py:62-83) —
         readable for as long as vacuum's retention keeps the files."""
-        live = with_canonical_id(self.store.raw(as_of=as_of).filter(live_filter()))
+        live = self.store.live(as_of=as_of)
         return q.apply_rows(live) if q else live
 
     def entities(self, q: Query | None = None, as_of: int | None = None) -> DataFrame:
-        live = self.statements(as_of=as_of) if as_of is not None else self.store.live()
+        live = self.store.live(as_of=as_of)
         scoped = q.apply_statements(live) if q else live
         return assemble_entities(scoped)
 
@@ -178,9 +176,7 @@ class Dataset:
                     raise
         from ftm_lakehouse_spark.model.statement import entity_shard
 
-        rows = with_canonical_id(
-            self.store.raw(as_of=as_of).filter(live_filter())
-        ).filter(
+        rows = self.store.live(as_of=as_of).filter(
             (F.col("shard") == entity_shard(F.lit(entity_id), self.config.shards))
             & (F.col("entity_id") == entity_id)
         )
@@ -329,9 +325,9 @@ class Dataset:
             except Exception:
                 if engine == "direct":
                     raise
-        rows = with_canonical_id(
-            self.store.raw(as_of=as_of).filter(live_filter())
-        ).filter(F.col("entity_id").isin(list(entity_ids)))
+        rows = self.store.live(as_of=as_of).filter(
+            F.col("entity_id").isin(list(entity_ids))
+        )
         try:
             collected = assemble_entities(rows).collect()
         except Exception as e:

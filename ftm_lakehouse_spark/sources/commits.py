@@ -424,9 +424,12 @@ class CommitLog:
         return min(self._versions(), default=1)
 
     def cleanup(self, cutoff: "datetime") -> list[str]:
-        """Delete commit records that are (a) at or below the newest
+        """Delete commit records that are (a) below the newest
         checkpoint — its folded state fully replaces them — and
-        (b) older than ``cutoff``. Also drops all but the two newest
+        (b) older than ``cutoff``. The checkpoint's own record is kept:
+        ``current_version`` reads the head from the record listing, so
+        reaping it would make a table whose head sits on a checkpoint
+        read as an empty version-0 log. Also drops all but the two newest
         checkpoints. Bounds log growth for long-lived tables (Delta's
         log-retention cleanup); exact ``files_since`` answers remain
         available for any cursor inside the retention window.
@@ -468,7 +471,7 @@ class CommitLog:
             return removed
         horizon = cps[-1]
         for v in self._versions():
-            if v > horizon:
+            if v >= horizon:
                 break
             rec = json.loads(self._fs.read_text(self._path(v)))
             if datetime.fromisoformat(rec["ts"]) >= cutoff:
@@ -481,6 +484,13 @@ class CommitLog:
         return removed
 
     # ------------------------------------------------------------- read
+    def record_text(self, version: int) -> str:
+        """The bytes of one commit record. Records are immutable, so
+        the text identifies a version of THIS log: a dataset dropped
+        and re-created at the same path writes a different record under
+        the same version number."""
+        return self._fs.read_text(self._path(version))
+
     def read(self, since: int = 0, until: int | None = None) -> list[dict]:
         """Commit records with ``since < version <= until``, ascending."""
         out = []

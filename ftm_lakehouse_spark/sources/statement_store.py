@@ -23,6 +23,12 @@ files:
   * **time travel** — ``raw(as_of=version)`` reads any snapshot whose
     retired files vacuum has not yet reaped; the version cursor
     (``raw_since`` / ``canonical_since``) rides the same log.
+  * **one scan per version** — the read set is resolved and listed
+    once per commit version: ``raw()`` keeps the head version's scan
+    (Delta's latest snapshot held in the driver), so every read of an
+    unchanged table — DSL queries, counts, exports, diffs, stats —
+    reuses it instead of replaying the log and running Spark's
+    per-file listing job again. A commit by any writer moves the head.
   * **clustering** — ``sortWithinPartitions(entity_id, ...)`` before
     every write keeps an entity's rows contiguous within files so
     min/max stats skip files on point lookups (reference 7-key sort O1,
@@ -167,6 +173,8 @@ class StatementStore:
             self._maint_lock = StatementStore._maint_locks.setdefault(
                 _lock_key(path), threading.RLock()
             )
+        #: ((head version, head record text), scan DataFrame) — see :meth:`raw`
+        self._head_scan: tuple[tuple[int, str], DataFrame] | None = None
 
     # ---------------------------------------------------------- reads
     def _data_path(self) -> str:
@@ -181,7 +189,18 @@ class StatementStore:
         is the commit log's file snapshot — never a directory listing —
         so concurrent rewrites are invisible until their single atomic
         commit, and ``as_of`` reads any un-vacuumed historical version
-        (Delta time travel, reference diff.py:62-83)."""
+        (Delta time travel, reference diff.py:62-83).
+
+        The read set is resolved and listed once per commit version:
+        the head scan is memoized under the head version, so a repeated
+        read of an unchanged table replays no log and starts no Spark
+        file-listing job (one log-directory listing and one read of the
+        head record per call decide the head). A commit by any writer
+        in any process moves the head and the next call rebuilds; the
+        record's text tells the head apart from the same version number
+        of a dataset dropped and re-created behind this handle.
+        ``as_of`` of any other version resolves uncached, as
+        ``PointReader`` does."""
         head = self.commits.current_version()
         if head == 0:
             if as_of is not None:
@@ -196,7 +215,17 @@ class StatementStore:
                     self._data_path()
                 )
             return self.spark.createDataFrame([], STATEMENT_SCHEMA)
-        files = self.commits.snapshot(as_of)
+        if as_of is not None and as_of != head:
+            return self._scan(self.commits.snapshot(as_of))
+        key = (head, self.commits.record_text(head))
+        memo = self._head_scan
+        if memo is not None and memo[0] == key:
+            return memo[1]
+        scan = self._scan(self.commits.snapshot(head))
+        self._head_scan = (key, scan)
+        return scan
+
+    def _scan(self, files: list[str]) -> DataFrame:
         if not files:
             return self.spark.createDataFrame([], STATEMENT_SCHEMA)
         data = self._data_path()
@@ -210,11 +239,11 @@ class StatementStore:
             .parquet(*paths)
         )
 
-    def live(self) -> DataFrame:
-        """Live view: tombstone-filtered + ``canonical_id`` alias,
-        window-free so predicates push to file stats (reference
-        ``statement`` view, logic/parquet.py:165-192)."""
-        return with_canonical_id(self.raw().filter(live_filter()))
+    def live(self, as_of: int | None = None) -> DataFrame:
+        """Live view of ``raw(as_of)``: tombstone-filtered +
+        ``canonical_id`` alias, window-free so predicates push to file
+        stats (reference ``statement`` view, logic/parquet.py:165-192)."""
+        return with_canonical_id(self.raw(as_of=as_of).filter(live_filter()))
 
     # --------------------------------------------------------- writes
     @staticmethod
@@ -986,17 +1015,21 @@ class StatementStore:
 
     def stats(self) -> dict:
         """DatasetStats shape (reference storage/parquet.py:294-304):
-        entity_count + per-schema facets, one aggregation pass."""
+        entity_count + per-schema facets, one aggregation pass — the
+        rollup's grand-total row is the distinct entity count."""
         rows = (
             self.live()
-            .groupBy("schema")
-            .agg(F.countDistinct("entity_id").alias("n"))
+            .rollup("schema")
+            .agg(
+                F.countDistinct("entity_id").alias("n"),
+                F.grouping("schema").alias("total"),
+            )
             .collect()
         )
-        schemata = {r["schema"]: r["n"] for r in rows}
+        schemata = {r["schema"]: r["n"] for r in rows if not r["total"]}
         return {
             "name": self.config.name,
-            "entity_count": self.count_entities(),
+            "entity_count": next((r["n"] for r in rows if r["total"]), 0),
             "things": {"schemata": schemata, "total": sum(schemata.values())},
         }
 

@@ -296,6 +296,33 @@ def test_log_cleanup_never_punches_interior_holes(tmp_path, monkeypatch):
     assert log.snapshot() == pre
 
 
+def test_cleanup_keeps_head_on_a_checkpoint(monkeypatch, tmp_path):
+    """A head that sits exactly on a checkpoint keeps its record
+    through log cleanup: the head version is read from the record
+    listing, and losing it made the table read as an empty log."""
+    from datetime import datetime, timedelta, timezone
+
+    from ftm_lakehouse_spark.sources import commits as commits_mod
+    from ftm_lakehouse_spark.sources.commits import CommitLog
+    from ftm_lakehouse_spark.sources.fs import LocalFS
+
+    monkeypatch.setattr(commits_mod, "CHECKPOINT_INTERVAL", 4)
+    fs = LocalFS()
+    root = str(tmp_path / "log")
+    fs.mkdirs(root)
+    log = CommitLog(fs, root)
+    for i in range(1, 5):  # commits 1-4, checkpoint at 4 = head
+        log.commit("append", [("s", str(i))], files_added=[f"f{i}.parquet"])
+    pre = log.snapshot()
+
+    removed = log.cleanup(datetime.now(timezone.utc) + timedelta(seconds=1))
+    assert removed == [f"{v:012d}.json" for v in (1, 2, 3)]
+    assert log.current_version() == 4
+    assert log.oldest_version() == 4
+    assert log.snapshot() == pre
+    assert log.commit("append", [("s", "5")], files_added=["f5.parquet"]) == 5
+
+
 def test_cleanup_reaps_stale_cond_probes(tmp_path):
     """Round-12 ADVICE: S3FS's conditional-write probe sentinels are
     deleted best-effort; under write-only credentials they accumulate

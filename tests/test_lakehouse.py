@@ -423,3 +423,28 @@ def test_set_model_class_extends_dataset_config(spark, lake_root):
             set_model_class(dict)
     finally:
         set_model_class(DatasetConfig)
+
+
+def test_stats_counts_a_two_schema_entity_once(spark, lake_root):
+    """``stats()`` is one rollup pass: ``entity_count`` counts an
+    entity with statements of two schemata once, while the per-schema
+    facets (and their ``things.total``) count it under each schema."""
+    # imported here: worker subprocesses import this module top-level
+    # (tests/test_multiprocess_store.py), where a relative import fails
+    from .helpers import make_df, stmt
+
+    ds = Lakehouse(spark, lake_root).dataset("st1")
+    ds.store.append(make_df(spark, [
+        stmt(id="a1", entity_id="a", schema="Person", value="A"),
+        stmt(id="a2", entity_id="a", schema="LegalEntity", prop="country", value="de"),
+        stmt(id="b1", entity_id="b", schema="Person", value="B"),
+        stmt(id="c1", entity_id="c", schema="Company", value="C", deleted_at="2024-02-01T00:00:00"),
+    ]))
+    assert ds.stats() == {
+        "name": "st1",
+        "entity_count": 2,
+        "things": {"schemata": {"Person": 2, "LegalEntity": 1}, "total": 3},
+    }
+    empty = Lakehouse(spark, lake_root).dataset("st2").stats()
+    assert empty["entity_count"] == 0
+    assert empty["things"] == {"schemata": {}, "total": 0}

@@ -4,9 +4,11 @@ SQL-string rendering must produce exactly the same map/array values for
 the real ontology dicts and for adversarial strings (quotes,
 backslashes, newlines, unicode)."""
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import pytest
 from pyspark.sql import functions as F

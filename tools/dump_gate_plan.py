@@ -4,7 +4,7 @@ itself triggers, e.g. approxQuantile-based gates are skipped here).
 
 Usage: python tools/dump_gate_plan.py <tag> <gate> [gate ...]
        PROFILE_SF_DIR=/root/testdata/sf0.1 (default)
-       PLANS_OUT=/root/repo/plans/r13      (default)
+       PLANS_OUT=<repo>/plans/r13          (default)
 """
 
 from __future__ import annotations
@@ -12,7 +12,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.environ.get("REPO_DIR", "/root/repo"))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ftm_lakehouse_spark.queries.inventory import query_map
 from ftm_lakehouse_spark.session import get_spark
@@ -22,7 +23,7 @@ def main() -> None:
     tag = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("PROFILE_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.environ.get("PLANS_OUT", "/root/repo/plans/r13")
+    out_dir = os.environ.get("PLANS_OUT", os.path.join(REPO, "plans", "r13"))
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("dump-gate-plan")
     qmap = query_map()

@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ftm_lakehouse_spark.queries.inventory import query_map
 from ftm_lakehouse_spark.session import get_spark
@@ -43,7 +44,7 @@ def main() -> None:
         return round(time.perf_counter() - t0, 4)
 
     out = {}
-    plans_dir = os.path.join("/root/repo", "plans", "r13")
+    plans_dir = os.path.join(REPO, "plans", "r13")
     os.makedirs(plans_dir, exist_ok=True)
     for name in names:
         fn = qmap[name]

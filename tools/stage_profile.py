@@ -18,7 +18,8 @@ import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from ftm_lakehouse_spark.queries.inventory import query_map
 from ftm_lakehouse_spark.session import get_spark

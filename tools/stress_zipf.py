@@ -30,7 +30,8 @@ import tempfile
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 os.environ.setdefault("SPARK_GRAFT_UI", "true")  # status REST API
 
